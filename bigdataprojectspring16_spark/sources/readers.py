@@ -2,9 +2,13 @@
 
 The fixtures are parquet-only, so CSV/JSON readers are exercised by
 round-trip tests (tests/test_sources_sinks.py) rather than declared
-queries (SURVEY §2.A "sources (non-query)"). Schemas are always
-explicit: at 100 TB, schema inference is a full extra pass over the
-data — never pay it.
+queries (SURVEY §2.A "sources (non-query)"). CSV and JSON schemas
+are always explicit: at 100 TB, schema inference is a full extra pass
+over the data — never pay it. :func:`read_parquet` infers from the
+parquet footers, which costs one Spark job per call;
+the fixture tables instead go through ``tables.load_table``, which
+infers once per file version and reads with the cached schema
+(SCALING.md §Scans).
 """
 
 from __future__ import annotations
@@ -32,5 +36,6 @@ def read_json(spark: SparkSession, path: str, schema: StructType | str) -> DataF
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet — schema from footers, columnar + predicate pushdown."""
+    """Parquet — schema inferred from footers (one Spark job per
+    call), columnar + predicate pushdown."""
     return spark.read.parquet(path)

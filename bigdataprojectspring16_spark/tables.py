@@ -3,15 +3,19 @@
 Tables: region nation customer supplier part orders lineitem events
 documents embeddings — one parquet file per table under the sf dir
 (TESTDATA.md:13-15). Schema-on-read from parquet footers; no custom
-schema layer (SURVEY §1.2).
+schema layer (SURVEY §1.2). Footers are read once per file version:
+the inferred schema is cached per process and later loads pass it
+explicitly, so they launch no Spark job (SCALING.md §Scans).
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import autosize_shuffle_partitions, ensure_session_confs
 
@@ -69,6 +73,52 @@ def input_bytes(path: str) -> int:
     return total
 
 
+#: Session confs that change how a parquet footer maps to Spark types
+#: (e.g. ``inferTimestampNTZ`` turns ``o_orderdate`` from
+#: timestamp_ntz into timestamp), so they are part of the schema key.
+_PARQUET_TYPE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: Inferred schema per (absolute path, size, mtime_ns, type confs) —
+#: the same (size, mtime_ns) staleness stamp as the bucketed layouts
+#: (sources/sinks.py). A rewritten file gets a new stamp, so it is
+#: inferred again.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a regular file's schema
+    once per process.
+
+    Inference launches one Spark job per call (~0.1 s at fixture
+    scale); a cached schema read launches none. Directory layouts
+    keep plain inference: their file sets change without the
+    directory's own stamp showing it.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(spark.conf.get(k, None) for k in _PARQUET_TYPE_CONFS),
+    )
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
@@ -76,7 +126,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = table_path(sf_dir, name)
     # VERDICT r8 item 2: shuffle sizing follows the data, not a knob.
     autosize_shuffle_partitions(spark, input_bytes(path))
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
