@@ -55,12 +55,10 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row global aggregates.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
-    exchanges across the 8 skew-family keys at sf0.1, rows equal;
-    receipts tools/receipts/bucketed_skew_ab_r12.txt and
-    bucketed_skew_declared_r13.txt). Semantics are flat-table
-    truth either way — the oracle never sees the layout.
+    the write-once bucketed layout (``tables.load_skew_table`` —
+    50→18 exchanges across the 8 skew-family keys at sf0.1, rows
+    equal; SCALING.md §Joins). Semantics are flat-table truth — the
+    oracle never sees the layout.
     """
     ev = load_skew_table(spark, sf_dir, "events")
     su = (
@@ -133,12 +131,10 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``to_date`` aligns the output type.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
-    exchanges across the 8 skew-family keys at sf0.1, rows equal;
-    receipts tools/receipts/bucketed_skew_ab_r12.txt and
-    bucketed_skew_declared_r13.txt). Semantics are flat-table
-    truth either way — the oracle never sees the layout.
+    the write-once bucketed layout (``tables.load_skew_table`` —
+    50→18 exchanges across the 8 skew-family keys at sf0.1, rows
+    equal; SCALING.md §Joins). Semantics are flat-table truth — the
+    oracle never sees the layout.
     """
     ev = load_skew_table(spark, sf_dir, "events")
     day = F.to_date(F.col("ts"))
@@ -306,12 +302,10 @@ def sessionize_gap_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a non-boundary event share a timestamp.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
-    exchanges across the 8 skew-family keys at sf0.1, rows equal;
-    receipts tools/receipts/bucketed_skew_ab_r12.txt and
-    bucketed_skew_declared_r13.txt). Semantics are flat-table
-    truth either way — the oracle never sees the layout.
+    the write-once bucketed layout (``tables.load_skew_table`` —
+    50→18 exchanges across the 8 skew-family keys at sf0.1, rows
+    equal; SCALING.md §Joins). Semantics are flat-table truth — the
+    oracle never sees the layout.
     """
     ev = load_skew_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -664,12 +658,10 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning the sessionization family already uses.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
-    exchanges across the 8 skew-family keys at sf0.1, rows equal;
-    receipts tools/receipts/bucketed_skew_ab_r12.txt and
-    bucketed_skew_declared_r13.txt). Semantics are flat-table
-    truth either way — the oracle never sees the layout.
+    the write-once bucketed layout (``tables.load_skew_table`` —
+    50→18 exchanges across the 8 skew-family keys at sf0.1, rows
+    equal; SCALING.md §Joins). Semantics are flat-table truth — the
+    oracle never sees the layout.
     """
     e = load_skew_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1273,12 +1265,10 @@ def events_decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible after rounding (measured: 2210.765 vs 2210.767).
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
-    exchanges across the 8 skew-family keys at sf0.1, rows equal;
-    receipts tools/receipts/bucketed_skew_ab_r12.txt and
-    bucketed_skew_declared_r13.txt). Semantics are flat-table
-    truth either way — the oracle never sees the layout.
+    the write-once bucketed layout (``tables.load_skew_table`` —
+    50→18 exchanges across the 8 skew-family keys at sf0.1, rows
+    equal; SCALING.md §Joins). Semantics are flat-table truth — the
+    oracle never sees the layout.
     """
     ev = load_skew_table(spark, sf_dir, "events")
     ref = ev.agg(F.max("ts").alias("ref_ts"))
@@ -1498,12 +1488,10 @@ def events_inter_arrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     either engine.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
-    exchanges across the 8 skew-family keys at sf0.1, rows equal;
-    receipts tools/receipts/bucketed_skew_ab_r12.txt and
-    bucketed_skew_declared_r13.txt). Semantics are flat-table
-    truth either way — the oracle never sees the layout.
+    the write-once bucketed layout (``tables.load_skew_table`` —
+    50→18 exchanges across the 8 skew-family keys at sf0.1, rows
+    equal; SCALING.md §Joins). Semantics are flat-table truth — the
+    oracle never sees the layout.
     """
     ev = load_skew_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

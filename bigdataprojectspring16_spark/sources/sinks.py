@@ -125,7 +125,7 @@ def ensure_bucketed_events(spark, sf_dir: str) -> tuple[str, str]:
     user_id-keyed aggregation/window read pre-shuffled buckets.
     Same freshness/stamping/locking contract as
     :func:`ensure_bucketed_pair` (shared ``_ensure_bucketed``
-    machinery; A/B receipt tools/receipts/bucketed_skew_ab_r12.txt)."""
+    machinery; measured verdict in SCALING.md §Joins)."""
     import hashlib
     import os
 

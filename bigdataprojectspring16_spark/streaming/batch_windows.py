@@ -136,12 +136,10 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag/gap/cumsum rewrite. Spark's session end = last event + gap.
 
     Physical layout (r13, VERDICT r12 #1): events/customer load via
-    the write-once bucketed layout (``tables.load_skew_table``,
-    knob ``SPARK_GRAFT_BUCKETED_EVENTS``, default ON — 50→18
-    exchanges across the 8 skew-family keys at sf0.1, rows equal;
-    receipts tools/receipts/bucketed_skew_ab_r12.txt and
-    bucketed_skew_declared_r13.txt). Semantics are flat-table
-    truth either way — the oracle never sees the layout.
+    the write-once bucketed layout (``tables.load_skew_table`` —
+    50→18 exchanges across the 8 skew-family keys at sf0.1, rows
+    equal; SCALING.md §Joins). Semantics are flat-table truth — the
+    oracle never sees the layout.
     """
     ev = load_skew_table(spark, sf_dir, "events")
     return (

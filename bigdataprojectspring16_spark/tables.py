@@ -143,25 +143,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: Session knob for the skew-family bucketed layout (VERDICT r12 #1).
-#: Default ON by measurement: the declared-plan A/B at sf0.1 shows
-#: 50→18 executed exchanges across the 8 skew-family keys with rows
-#: equal 8/8 and every wall faster
-#: (tools/receipts/bucketed_skew_ab_r12.txt — lever receipt;
-#: tools/receipts/bucketed_skew_declared_r13.txt — declared plans).
-#: Set to "0" to force the flat parquet scans (the semantics are
-#: identical either way — the oracle strings state flat-table truth).
-BUCKETED_EVENTS_ENV = "SPARK_GRAFT_BUCKETED_EVENTS"
-
-
-def bucketed_events_enabled() -> bool:
-    return os.environ.get(BUCKETED_EVENTS_ENV, "1").lower() not in (
-        "0", "false", "no"
-    )
-
-
 def load_skew_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """events/customer via the write-once bucketed layout (default ON).
+    """events/customer via the write-once bucketed layout.
 
     The skew family — the events⋈customer equi-join that funnels the
     whole stream through the hot 10% of customer keys, plus every
@@ -172,13 +155,14 @@ def load_skew_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     shuffle, paid once at write time (the 100 TB lever: at cluster
     scale the bucket count is sized to the data and the same layout
     amortizes across every downstream query; measured 50→18
-    exchanges at sf0.1, receipts above).
+    exchanges across the 8 skew-family keys at sf0.1 with rows equal
+    8/8 and every wall faster — SCALING.md §Joins).
 
     Falls back to the flat scan — semantically identical — when the
-    knob is off or the layout can't be built (read-only warehouse);
-    the fallback warns so a silently-degraded run is visible.
+    layout can't be built (read-only warehouse); the fallback warns
+    so a silently-degraded run is visible.
     """
-    if name not in ("events", "customer") or not bucketed_events_enabled():
+    if name not in ("events", "customer"):
         return load_table(spark, sf_dir, name)
     try:
         # Local import: sources.sinks imports from this module.

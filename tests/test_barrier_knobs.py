@@ -1,181 +1,133 @@
-"""Both settings of the materialization-barrier knobs must be
-result-identical (SCALING.md §CC / §K).
+"""The barrier mechanism is the one user-set option left in the
+package (SCALING.md "Barrier mechanism modes"): ``local`` lazy
+localCheckpoint (default) or ``durable`` reliable checkpoint(), the
+cluster fault-recovery path. It changes physical materialization
+only, never results.
 
-The shipped defaults are performance choices measured at fixture
-scale (dedup re-evaluates shared frames; PageRank checkpoints its
-loop invariants); the OTHER setting of each knob is the documented
-100 TB deployment path. Without these tests the non-default path has
-no regression guard — the parity suite only ever runs the defaults.
+PageRank's barrier placement and edge build are picked by
+``decade_regime(spark)`` from the shuffle width (SCALING.md §PR8G),
+not by an option; the forced-decade tests below pin that the decade
+plan (self-join edge build, sharded pair distinct, DISK_ONLY
+barriers) returns the fixture-width rows.
 """
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
+import bigdataprojectspring16_spark.session as S
 from bigdataprojectspring16_spark import QUERIES
-from bigdataprojectspring16_spark.llmops import dedup, graph
-from bigdataprojectspring16_spark.plans.barriers import knob
+from bigdataprojectspring16_spark.llmops import graph
+from bigdataprojectspring16_spark.plans import barriers
 
 from .conftest import SF_SMALL as SF_DIR
+
+#: Every registry key that still places a barrier: the CC fixpoint
+#: rounds, the PageRank loop invariants and the k-means rounds.
+_BARRIER_KEYS = [
+    "graph_connected_components",
+    "graph_pagerank_rounds",
+    "kmeans_lloyd_rounds",
+]
 
 
 def _rows(spark, key):
     return sorted(tuple(r) for r in QUERIES[key](spark, SF_DIR).collect())
 
 
-@pytest.mark.parametrize(
-    "key",
-    ["dedup_minhash_lsh", "dedup_threshold_sweep", "dedup_near_jaccard"],
-)
-def test_materialize_shared_both_settings_identical(spark, key):
-    # knob() flips via session conf — the race-free surface; module
-    # globals stay immutable defaults (VERDICT r5 item 7)
-    with knob(spark, dedup.MATERIALIZE_SHARED_CONF, False):
-        base = _rows(spark, key)
-    with knob(spark, dedup.MATERIALIZE_SHARED_CONF, True):
-        alt = _rows(spark, key)
-    assert base == alt
-
-
-def test_materialize_invariants_both_settings_identical(spark):
-    with knob(spark, graph.MATERIALIZE_INVARIANTS_CONF, True):
-        base = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, graph.MATERIALIZE_INVARIANTS_CONF, False):
-        alt = _rows(spark, "graph_pagerank_rounds")
-    assert base == alt
-
-
-def test_lazy_checkpoint_both_settings_identical(spark):
-    with knob(spark, graph.LAZY_CHECKPOINT_CONF, True):
-        base = _rows(spark, "graph_connected_components")
-    with knob(spark, graph.LAZY_CHECKPOINT_CONF, False):
-        alt = _rows(spark, "graph_connected_components")
-    assert base == alt
-
-
-# --- r5: barrier MECHANISM modes (plans/barriers.py) ----------------
-#
-# The structural knobs above decide WHERE barriers sit; the barrier
-# mode decides HOW each materializes (local/eager localCheckpoint vs
-# durable checkpoint() — the cluster fault-tolerance path from the
-# r4 verdict). Every mode must be result-identical on keys
-# that exercise every barrier site: the CC fixpoint loop, the
-# PageRank loop invariants, and (with MATERIALIZE_SHARED forced on)
-# the dedup shared frames.  (A replicated-persist mode was measured
-# and rejected — persist keeps lineage, and the fixpoint's plan tree
-# grows exponentially with rounds; see plans/barriers.py docstring.)
-
-from bigdataprojectspring16_spark.plans import barriers  # noqa: E402
-
-_BARRIER_KEYS = [
-    "graph_connected_components",
-    "graph_pagerank_rounds",
-    "dedup_minhash_lsh",
-    "dedup_near_jaccard",
-]
-
-
-@pytest.mark.parametrize("mode", ["eager", "durable"])
+@pytest.mark.parametrize("mode", ["durable"])
 def test_barrier_modes_result_identical(spark, tmp_path, mode):
-    with knob(spark, dedup.MATERIALIZE_SHARED_CONF, True):
-        base = {k: _rows(spark, k) for k in _BARRIER_KEYS}
-        if mode == "durable":
-            spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-        with knob(spark, barriers.BARRIER_MODE_CONF, mode):
-            for k in _BARRIER_KEYS:
-                assert _rows(spark, k) == base[k], (mode, k)
-
-
-def test_barrier_mode_rejects_unknown_value(spark):
-    spark.conf.set(barriers.BARRIER_MODE_CONF, "bogus")
+    base = {k: _rows(spark, k) for k in _BARRIER_KEYS}
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    spark.conf.set(barriers.BARRIER_MODE_CONF, mode)
     try:
-        with pytest.raises(ValueError, match="barrierMode"):
-            barriers.barrier_mode(spark)
+        for k in _BARRIER_KEYS:
+            assert _rows(spark, k) == base[k], (mode, k)
+        # durable really wrote to the checkpoint dir (not a silent
+        # fallback to local blocks)
+        assert any(p.is_file() for p in (tmp_path / "ckpt").rglob("*"))
     finally:
         spark.conf.unset(barriers.BARRIER_MODE_CONF)
 
 
-def test_conf_knob_overrides_module_global(spark):
-    # Session conf wins over the module default (ADVICE r4: per-query
-    # overrides must not race on module state).
-    assert barriers.conf_knob(spark, "spark.bigdataprojectspring16.x", True)
-    spark.conf.set("spark.bigdataprojectspring16.x", "false")
+def test_barrier_mode_rejects_unknown_value(spark):
+    assert barriers.barrier_mode(spark) == "local"
+    # the removed eager mode must fail loudly, not fall back to local
+    for bad in ("bogus", "eager"):
+        spark.conf.set(barriers.BARRIER_MODE_CONF, bad)
+        try:
+            with pytest.raises(ValueError, match="barrierMode"):
+                barriers.barrier_mode(spark)
+        finally:
+            spark.conf.unset(barriers.BARRIER_MODE_CONF)
+
+
+@pytest.fixture(scope="module")
+def pagerank_runs(spark):
+    """graph_pagerank_rounds at the decade shuffle width (64 ×
+    defaultParallelism, forced at fixture data) and at fixture width:
+    rows, the executed plan of the edge frame handed to the first
+    barrier, and the disk flag of every barrier placed."""
+    real_barrier = graph.barrier
+    seen = []
+
+    def recording_barrier(df, disk=False):
+        seen.append((df, disk))
+        return real_barrier(df, disk=disk)
+
+    def run():
+        seen.clear()
+        df = QUERIES["graph_pagerank_rounds"](spark, SF_DIR)
+        rows = sorted(map(tuple, df.collect()))
+        edges = seen[0][0]._jdf.queryExecution().executedPlan().toString()
+        return rows, edges, [disk for _, disk in seen]
+
+    key = S._SHUFFLE_PARTITIONS_KEY
+    orig = spark.conf.get(key)
+    width = 64 * spark.sparkContext.defaultParallelism
+    graph.barrier = recording_barrier
     try:
-        assert not barriers.conf_knob(
-            spark, "spark.bigdataprojectspring16.x", True
-        )
+        spark.conf.set(key, str(width))  # force the decade regime
+        try:
+            decade = run()
+        finally:
+            spark.conf.set(key, orig)
+        fixture = run()
     finally:
-        spark.conf.unset("spark.bigdataprojectspring16.x")
+        graph.barrier = real_barrier
+    return width, decade, fixture
 
 
-def test_pagerank_edge_build_both_strategies_identical(spark):
-    with knob(spark, graph.PAGERANK_EDGE_BUILD_CONF, "group"):
-        base = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, graph.PAGERANK_EDGE_BUILD_CONF, "selfjoin"):
-        alt = _rows(spark, "graph_pagerank_rounds")
-    assert base == alt
+def test_pagerank_edge_build_both_strategies_identical(pagerank_runs):
+    # decade regime: orderkey self-join edge build; fixture width:
+    # grouped collect_set build; same rows
+    _, (decade_rows, plan, _), (rows, fixture_plan, _) = pagerank_runs
+    assert re.search(r"Join .*\[okey#\d+L?\], \[okey#\d+L?\]", plan), (
+        "decade edge build is not the orderkey self-join:\n" + plan
+    )
+    assert "collect_set" not in plan
+    assert "collect_set" in fixture_plan
+    assert len(rows) == 20
+    assert decade_rows == rows
 
 
-@pytest.mark.parametrize(
-    "key", ["graph_connected_components", "graph_cluster_keep_best"]
-)
-def test_cc_star_impl_both_forms_identical(spark, key):
-    # r7: the window star rounds must return the exact rows of the
-    # r3-r6 groupBy+join form (same per-key minima by construction;
-    # this pins it against the real fixture graph).
-    with knob(spark, graph.CC_STAR_IMPL_CONF, "window"):
-        base = _rows(spark, key)
-    with knob(spark, graph.CC_STAR_IMPL_CONF, "groupjoin"):
-        alt = _rows(spark, key)
-    assert base == alt
-
-
-def test_cc_star_impl_rejects_unknown_value(spark):
-    with knob(spark, graph.CC_STAR_IMPL_CONF, "bogus"):
-        with pytest.raises(ValueError, match="ccStarImpl"):
-            QUERIES["graph_connected_components"](spark, SF_DIR)
-
-
-def test_barrier_storage_knob(spark):
-    """barrierStorage=disk routes local barriers to DISK_ONLY blocks;
-    the default is Spark's stock level; junk values raise."""
-    import pytest
-    from pyspark.storagelevel import StorageLevel
-
-    from bigdataprojectspring16_spark.plans import barriers
-
-    assert barriers._local_barrier_level(spark) is None
-    with barriers.knob(spark, barriers.BARRIER_STORAGE_CONF, "disk"):
-        assert (
-            barriers._local_barrier_level(spark) == StorageLevel.DISK_ONLY
-        )
-        # and the barrier itself still materializes + truncates lineage
-        df = barriers.barrier(
-            spark.range(100).selectExpr("id", "id * 2 AS v"), eager=True
-        )
-        assert df.count() == 100
-    with barriers.knob(spark, barriers.BARRIER_STORAGE_CONF, "junk"):
-        with pytest.raises(ValueError):
-            barriers._local_barrier_level(spark)
-
-
-def test_pagerank_sharded_agg_all_modes_identical(spark):
-    # r11: the sharded-aggregation arm (explicit group-key
-    # repartition before every fact-sized aggregate) must return the
-    # exact rows of the default partial-aggregation arm — the knob
-    # changes physical partitioning only, never results.
-    with knob(spark, graph.PAGERANK_SHARDED_AGG_CONF, "off"):
-        base = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, graph.PAGERANK_SHARDED_AGG_CONF, "on"):
-        sharded = _rows(spark, "graph_pagerank_rounds")
-    with knob(spark, graph.PAGERANK_SHARDED_AGG_CONF, "auto"):
-        auto = _rows(spark, "graph_pagerank_rounds")
-    assert base == sharded == auto
-
-
-def test_pagerank_sharded_agg_rejects_bad_value(spark):
-    import pytest as _pytest
-
-    with knob(spark, graph.PAGERANK_SHARDED_AGG_CONF, "sometimes"):
-        with _pytest.raises(ValueError, match="auto | on | off"):
-            _rows(spark, "graph_pagerank_rounds")
+def test_pagerank_sharded_agg_all_modes_identical(pagerank_runs):
+    # decade regime: the pair distinct is key-sliced by a
+    # non-coalescable REPARTITION_BY_NUM exchange and every invariant
+    # barrier is DISK_ONLY; fixture width has neither; same rows
+    width, (decade_rows, plan, disks), fixture = pagerank_runs
+    rows, fixture_plan, fixture_disks = fixture
+    pair_shard = re.search(
+        r"Exchange hashpartitioning\(u#\d+L?, v#\d+L?, (\d+)\), "
+        r"REPARTITION_BY_NUM",
+        plan,
+    )
+    assert pair_shard and int(pair_shard.group(1)) == width, plan
+    # the shard sits below the pair distinct (the (u, v) aggregate)
+    assert plan.index("HashAggregate(keys=[u#") < pair_shard.start()
+    assert disks == [True, True, True]
+    assert "REPARTITION_BY_NUM" not in fixture_plan
+    assert fixture_disks == [False, False, False]
+    assert decade_rows == rows

@@ -276,30 +276,12 @@ def test_ensure_bucketed_pair_vanished_source_fails_loud(spark, tmp_path):
 # --- r13: the skew-family declared consumer (VERDICT r12 #1) --------
 
 
-def test_load_skew_table_knob_off_is_flat(spark, monkeypatch):
-    """With SPARK_GRAFT_BUCKETED_EVENTS=0 the skew loader is exactly
-    the flat loader — same rows, and the plan scans the source
-    parquet, not a catalog table."""
+def test_load_skew_table_rows_equal_flat(spark):
+    """The bucketed layout holds byte-identical data for both skew
+    tables — the layout is a physical detour the semantics never
+    see."""
     from bigdataprojectspring16_spark.tables import load_skew_table
 
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EVENTS", "0")
-    flat = load_table(spark, SF_DIR, "events")
-    got = load_skew_table(spark, SF_DIR, "events")
-    assert any("events.parquet" in f for f in got.inputFiles()), (
-        "knob-off skew load must scan the source parquet"
-    )
-    assert sorted(map(tuple, flat.collect())) == sorted(
-        map(tuple, got.collect())
-    )
-
-
-def test_load_skew_table_rows_equal_flat(spark, monkeypatch):
-    """Default (knob on): the bucketed layout holds byte-identical
-    data for both skew tables — the layout is a physical detour the
-    semantics never see."""
-    from bigdataprojectspring16_spark.tables import load_skew_table
-
-    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_EVENTS", raising=False)
     for name in ("events", "customer"):
         flat = sorted(map(tuple, load_table(spark, SF_DIR, name).collect()))
         buck = sorted(
@@ -308,29 +290,14 @@ def test_load_skew_table_rows_equal_flat(spark, monkeypatch):
         assert flat == buck, f"bucketed {name} rows differ from flat"
 
 
-def test_skew_key_plan_rides_buckets(spark, monkeypatch):
+def test_skew_key_plan_rides_buckets(spark):
     """sessionize_gap_batch keys every window on user_id; under the
     bucketed layout the executed plan must contain NO hash-partition
     exchange — the write-time bucketing is the shuffle (the sf0.1
     receipt measured 2→0 exchanges for this key)."""
     from bigdataprojectspring16_spark import QUERIES
 
-    monkeypatch.delenv("SPARK_GRAFT_BUCKETED_EVENTS", raising=False)
     df = QUERIES["sessionize_gap_batch"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan, plan[:800]
-
-
-def test_skew_key_rows_equal_across_knob(spark, monkeypatch):
-    """The skewed events⋈customer join returns identical rows with
-    the layout on and off (the declared-plan A/B contract, pinned at
-    fixture scale; sf0.1 receipt bucketed_skew_declared_r13.txt)."""
-    from bigdataprojectspring16_spark import QUERIES
-
-    key = QUERIES["join_skew_events_customers"]
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EVENTS", "0")
-    flat = sorted(map(tuple, key(spark, SF_DIR).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_BUCKETED_EVENTS", "1")
-    buck = sorted(map(tuple, key(spark, SF_DIR).collect()))
-    assert flat == buck

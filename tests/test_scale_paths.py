@@ -400,51 +400,6 @@ def test_autosize_raise_only_and_host_respect(spark):
         S._AUTO_SIZED.pop(spark, None)
 
 
-def test_verify_token_codes_on_equals_off(spark):
-    """The xxhash64 verify-coding knob (SCALING.md §SF100) must be a
-    pure physical rewrite: with codes forced ON, every coded key's
-    full result equals the string-form (OFF) result row-for-row —
-    Jaccard is a set function and |intersect|/|union| survive the
-    injective-in-practice 64-bit token coding."""
-    from bigdataprojectspring16_spark.llmops import corpus
-    from bigdataprojectspring16_spark.plans.barriers import knob
-
-    keys = [
-        ("dedup_minhash_lsh", dedup.dedup_minhash_lsh),
-        ("dedup_near_jaccard", dedup.dedup_near_jaccard),
-        ("dedup_ngram_jaccard", dedup.dedup_ngram_jaccard),
-        ("dedup_edit_distance", dedup.dedup_edit_distance),
-        ("dedup_threshold_sweep", corpus.dedup_threshold_sweep),
-    ]
-    for name, fn in keys:
-        with knob(spark, dedup.VERIFY_TOKEN_CODES_CONF, "off"):
-            off = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        with knob(spark, dedup.VERIFY_TOKEN_CODES_CONF, "on"):
-            on = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        assert on == off, f"{name}: coded verify changed the result"
-        assert len(off) > 0, f"{name}: empty fixture result proves nothing"
-
-
-def test_verify_token_codes_knob_semantics(spark):
-    """Default is ON (measured: hash-equal + faster at every scale);
-    ``auto`` resolves by decade regime — OFF at fixture width, ON
-    once the autosized width crosses 64x parallelism."""
-    from bigdataprojectspring16_spark.plans.barriers import knob
-    from bigdataprojectspring16_spark.session import (
-        _SHUFFLE_PARTITIONS_KEY,
-    )
-
-    assert dedup.verify_token_codes(spark) is True  # shipped default
-    with knob(spark, dedup.VERIFY_TOKEN_CODES_CONF, "auto"):
-        assert dedup.verify_token_codes(spark) is False
-        wide = 64 * spark.sparkContext.defaultParallelism
-        with knob(spark, _SHUFFLE_PARTITIONS_KEY, str(wide)):
-            assert dedup.verify_token_codes(spark) is True
-    with knob(spark, dedup.VERIFY_TOKEN_CODES_CONF, "bogus"):
-        with pytest.raises(ValueError, match="verifyTokenCodes"):
-            dedup.verify_token_codes(spark)
-
-
 def test_decade_width_guard_survives_the_optimizer(spark):
     """r13 (the sf50 8 g adjudication): the decade pre-shard must
     appear in the PHYSICAL plan as a REPARTITION_BY_NUM exchange —

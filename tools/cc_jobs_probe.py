@@ -53,8 +53,7 @@ def main() -> None:
             F.greatest("src", "dst").alias("dst"),
         )
         .where(F.col("src") != F.col("dst"))
-        .distinct(),
-        eager=False,
+        .distinct()
     )
 
     prev_n = graph._count_materialize(e)
@@ -68,9 +67,7 @@ def main() -> None:
         rounds += 1
         g = phase(f"p2_round{rounds}")
         t0 = time.perf_counter()
-        new = barrier(
-            graph._small_star(graph._large_star(e)), eager=False
-        )
+        new = barrier(graph._small_star(graph._large_star(e)))
         n_new = graph._count_materialize(new)
         count_equal = n_new == prev_n
         t1 = time.perf_counter()
